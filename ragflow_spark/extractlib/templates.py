@@ -1,9 +1,16 @@
-"""Template chunkers over HTML pages: naive / book / one.
+"""Template chunkers: naive / book / one / paper / laws (+ docx, manual).
 
-Behavioral equivalents of the reference template ``chunk()`` entry points'
-HTML branches (FACTORY at /root/reference/rag/svr/task_executor.py:67-84),
-returning plain chunk text lists (the reference's ``section_only`` shape)
-plus deterministic content-addressed chunk ids.
+Behavioral equivalents of the reference template ``chunk()`` entry points
+(FACTORY at /root/reference/rag/svr/task_executor.py:67-84), returning
+plain chunk text lists (the reference's ``section_only`` shape).
+
+The HTML / PDF chunkers take parsed sections — the newline split of
+``htmlparse.extract_html`` or ``pdfrules.pdf_to_sections``'s tagged pairs
+— so the Spark job derives extracted text and chunks from one parse;
+``chunk_sections`` is its template x format dispatch. The bytes-in
+``chunk_naive_html`` / ``chunk_naive_pdf`` / ``chunk_paper_pdf`` /
+``extract_pdf_text`` are parse -> chunk compositions of the same
+functions.
 
 Documented divergence: the reference samples sections with the unseeded
 global ``random`` for ``is_english`` / ``bullets_category``
@@ -12,7 +19,7 @@ global ``random`` for ``is_english`` / ``bullets_category``
 
 from __future__ import annotations
 
-from .htmlparse import extract_html, html_sections
+from .htmlparse import html_sections
 from .merge import (
     bullets_category,
     hierarchical_merge,
@@ -20,26 +27,27 @@ from .merge import (
     make_colon_as_title,
     naive_merge,
     remove_contents_table,
+    title_frequency,
 )
+from .pdfrules import pdf_to_sections, remove_tag
 from .xxh64 import chunk_id
 
 
-def chunk_naive_html(binary: bytes, chunk_token_num: int = 128,
-                     delimiter: str = "\n!?。；！？") -> list[str]:
+def _naive_html(sections: list[str], chunk_token_num: int = 128,
+                delimiter: str = "\n!?。；！？") -> list[str]:
     """naive template, HTML branch (rag/app/naive.py:436-440,465-470):
-    sections = HtmlParser()(...), drop empties, naive_merge(128)."""
-    sections = [(s, "") for s in html_sections(binary) if s]
-    return naive_merge(sections, chunk_token_num, delimiter)
+    drop empty sections, naive_merge(128)."""
+    return naive_merge([(s, "") for s in sections if s], chunk_token_num,
+                       delimiter)
 
 
-def chunk_book_html(binary: bytes, chunk_token_num: int = 256,
-                    delimiter: str = "\n。；！？") -> tuple[list[str], str]:
+def _book_html(sections: list[str]) -> tuple[list[str], str]:
     """book template, HTML branch (rag/app/book.py:106-112,128-140).
 
     Returns (chunks, merge_mode) where merge_mode is 'hierarchical' when a
     bullet class was detected, else 'naive'.
     """
-    sections = [(s, "") for s in html_sections(binary) if s]
+    sections = [(s, "") for s in sections if s]
     remove_contents_table(sections, eng=is_english([t for t, _ in sections]))
     make_colon_as_title(sections)
     bull = bullets_category([t for t, _ in sections])
@@ -53,52 +61,62 @@ def chunk_book_html(binary: bytes, chunk_token_num: int = 256,
         parts = s.split("@")
         plain.append((parts[0], "@" + parts[1]) if len(parts) == 2
                      else (parts[0], ""))
-    return naive_merge(plain, chunk_token_num, delimiter), "naive"
+    return naive_merge(plain, 256, "\n。；！？"), "naive"
 
 
-def chunk_one_html(binary: bytes) -> list[str]:
-    """one template, HTML branch (rag/app/one.py:108-111,128-131):
-    the whole document is a single chunk joined by newlines."""
-    sections = [s for s in html_sections(binary) if s]
+def _one(sections: list[str]) -> list[str]:
+    """one template (rag/app/one.py:108-111,128-131): the whole document
+    is a single chunk, its non-empty sections joined by newlines. PDF
+    callers pass the tag-stripped sections."""
+    sections = [s for s in sections if s]
     return ["\n".join(sections)] if sections else []
 
 
-def chunks_with_ids(chunks: list[str], url: str) -> list[tuple[int, str, str]]:
-    """Attach (chunk_seq, chunk_text, chunk_id); id mirrors
-    task_executor.py:266 with the url standing in for doc_id."""
-    out = []
-    for seq, text in enumerate(chunks):
-        if not text.strip():
-            continue
-        out.append((seq, text, chunk_id(text, url)))
-    return out
+def _laws(sections: list[str]) -> list[str]:
+    """laws template (rag/app/laws.py:179-208): TOC removal, colon-title
+    split, bullet vote, hierarchical_merge(depth 5), chunks joined by
+    newline. No naive fallback — a doc with no bullet class yields no
+    chunks (hierarchical_merge returns [] for bull == -1)."""
+    sections = [s for s in sections if s]  # a copy: the passes mutate it
+    remove_contents_table(sections, eng=is_english(sections))
+    make_colon_as_title(sections)
+    bull = bullets_category(sections)
+    return ["\n".join(ck) for ck in hierarchical_merge(bull, sections, 5)]
 
 
-def chunks_with_ids_docx(chunks: list[str], images: list,
-                         url: str) -> list[tuple[int, str, str, object]]:
-    """tokenize_chunks_docx (rag/nlp/__init__.py:280-292): the docx
-    variant rides each chunk's accumulated image along into the output
-    row; whitespace-only chunks are skipped together with their image.
-    """
-    out = []
-    for seq, (text, image) in enumerate(zip(chunks, images)):
-        if not text.strip():
-            continue
-        out.append((seq, text, chunk_id(text, url), image))
-    return out
+def _stripped(sections: list[tuple[str, str]]) -> list[str]:
+    """Non-empty tag-stripped texts of PDF sections."""
+    return [s for s in (remove_tag(t) for t, _ in sections) if s]
 
 
-def chunk_paper_pdf(binary: bytes,
-                    keep_tags: bool = False) -> list[str]:
+def pdf_text(sections: list[tuple[str, str]]) -> tuple[str, str, int]:
+    """PDF sections -> (title, extracted_text, n_sections): the
+    byte-identity surface for the PDF path (title = first section by
+    construction of the rule chain; text = tag-stripped sections joined
+    by newline)."""
+    lines = _stripped(sections)
+    if not lines:
+        return "", "", 0
+    return lines[0], "\n".join(lines), len(lines)
+
+
+def _naive_pdf(sections: list[tuple[str, str]], chunk_token_num: int = 128,
+               keep_tags: bool = False) -> list[str]:
+    """naive template over the PDF rule-chain sections (rag/app/naive.py
+    PDF branch shape: sections with position tags -> naive_merge ->
+    tag-strip at tokenize_chunks time)."""
+    cks = naive_merge([(t, "") for t, _ in sections], chunk_token_num)
+    return [c if keep_tags else remove_tag(c) for c in cks
+            if remove_tag(c).strip()]
+
+
+def _paper_pdf(sections: list[tuple[str, str]],
+               keep_tags: bool = False) -> list[str]:
     """paper template, Plain-PDF path (rag/app/paper.py:186-208): pivot on
     the most frequent title level, merge sections between pivots, join by
     newline; position tags stripped for the chunk text exactly as
     tokenize_chunks does via pdf_parser.remove_tag
     (rag/nlp/__init__.py:258-277)."""
-    from .merge import title_frequency
-    from .pdfrules import pdf_to_sections, remove_tag
-
-    sections = pdf_to_sections(binary)
     if not sections:
         return []
     bull = bullets_category([t for t, _ in sections])
@@ -123,54 +141,70 @@ def chunk_paper_pdf(binary: bytes,
     return [remove_tag(c) for c in chunks]
 
 
+def chunk_sections(template: str, sections: list,
+                   is_pdf: bool) -> tuple[list[str], str]:
+    """One parsed document -> (raw chunks, merge_mode) for a job template.
+
+    ``sections`` are a PDF's tagged pairs or an HTML page's text lines.
+    PDF chunks keep their position tags where the path produces them; the
+    caller parses page numbers out of them and strips them. The paper
+    template supports PDF only (rag/app/paper.py:160-162): an HTML page
+    gets no chunks."""
+    if template == "naive":
+        return (_naive_pdf(sections, keep_tags=True) if is_pdf
+                else _naive_html(sections)), "naive"
+    if template == "book":
+        if is_pdf:
+            return _naive_pdf(sections, 256, keep_tags=True), "naive"
+        return _book_html(sections)
+    if template == "one":
+        return _one(_stripped(sections) if is_pdf else sections), "one"
+    if template == "paper":
+        return (_paper_pdf(sections, keep_tags=True) if is_pdf
+                else []), "paper"
+    if template == "laws":
+        if is_pdf:
+            # laws.py:165-169,198-208: the tagged sections go through the
+            # same merge, tags are stripped at tokenize_chunks time
+            return [remove_tag(c) for c in
+                    _laws([t for t, _ in sections])], "laws"
+        return _laws(sections), "laws"
+    raise ValueError(template)
+
+
+def chunk_naive_html(binary: bytes, chunk_token_num: int = 128,
+                     delimiter: str = "\n!?。；！？") -> list[str]:
+    return _naive_html(html_sections(binary), chunk_token_num, delimiter)
+
+
 def extract_pdf_text(binary: bytes,
                      merge: str = "auto") -> tuple[str, str, int]:
-    """PDF bytes -> (title, extracted_text, n_sections): the byte-identity
-    surface for the PDF path (title = first section by construction of
-    the rule chain; text = tag-stripped sections joined by newline).
-    ``merge`` selects the box-merge pass (see pdfrules.pdf_to_sections)."""
-    from .pdfrules import pdf_to_sections, remove_tag
-
-    sections = [remove_tag(t) for t, _ in pdf_to_sections(binary, merge)]
-    sections = [s for s in sections if s]
-    if not sections:
-        return "", "", 0
-    return sections[0], "\n".join(sections), len(sections)
+    """``merge`` selects the box-merge pass (see pdfrules.pdf_to_sections)."""
+    return pdf_text(pdf_to_sections(binary, merge))
 
 
 def chunk_naive_pdf(binary: bytes, chunk_token_num: int = 128,
                     keep_tags: bool = False) -> list[str]:
-    """naive template over the PDF rule-chain sections (rag/app/naive.py
-    PDF branch shape: sections with position tags -> naive_merge ->
-    tag-strip at tokenize_chunks time)."""
-    from .pdfrules import pdf_to_sections, remove_tag
-
-    sections = [(t, "") for t, _ in pdf_to_sections(binary)]
-    cks = naive_merge(sections, chunk_token_num)
-    if keep_tags:
-        return [c for c in cks if remove_tag(c).strip()]
-    return [remove_tag(c) for c in cks if remove_tag(c).strip()]
+    return _naive_pdf(pdf_to_sections(binary), chunk_token_num, keep_tags)
 
 
-def chunk_one_pdf(binary: bytes) -> list[str]:
-    """one template, PDF branch: whole doc joined by newlines."""
-    from .pdfrules import pdf_to_sections, remove_tag
-
-    secs = [remove_tag(t) for t, _ in pdf_to_sections(binary)]
-    secs = [s for s in secs if s]
-    return ["\n".join(secs)] if secs else []
+def chunk_paper_pdf(binary: bytes, keep_tags: bool = False) -> list[str]:
+    return _paper_pdf(pdf_to_sections(binary), keep_tags)
 
 
-def chunk_laws_html(binary: bytes) -> list[str]:
-    """laws template, HTML branch (rag/app/laws.py:179-208): TOC removal,
-    colon-title split, bullet vote, hierarchical_merge(depth 5), chunks
-    joined by newline. No naive fallback — a doc with no bullet class
-    yields no chunks (hierarchical_merge returns [] for bull == -1)."""
-    sections = [s for s in html_sections(binary) if s]
-    remove_contents_table(sections, eng=is_english(sections))
-    make_colon_as_title(sections)
-    bull = bullets_category(sections)
-    return ["\n".join(ck) for ck in hierarchical_merge(bull, sections, 5)]
+def chunks_with_ids_docx(chunks: list[str], images: list,
+                         url: str) -> list[tuple[int, str, str, object]]:
+    """tokenize_chunks_docx (rag/nlp/__init__.py:280-292): (chunk_seq,
+    chunk_text, chunk_id, image) rows, the id mirroring
+    task_executor.py:266 with the url standing in for doc_id;
+    whitespace-only chunks are skipped together with their image.
+    """
+    out = []
+    for seq, (text, image) in enumerate(zip(chunks, images)):
+        if not text.strip():
+            continue
+        out.append((seq, text, chunk_id(text, url), image))
+    return out
 
 
 def chunk_laws_docx(binary: bytes) -> list[str]:
@@ -217,25 +251,6 @@ def chunk_laws_docx(binary: bytes) -> list[str]:
     return [s for s in sections if s]
 
 
-def chunk_laws_pdf(binary: bytes) -> list[str]:
-    """laws template, PDF branch (laws.py:165-169,198-208): rule-chain
-    sections with position tags, same hierarchical merge, tags stripped
-    at tokenize_chunks time."""
-    from .pdfrules import pdf_to_sections, remove_tag
-
-    sections = [t for t, _ in pdf_to_sections(binary)]
-    remove_contents_table(sections, eng=is_english(sections))
-    make_colon_as_title(sections)
-    bull = bullets_category(sections)
-    return [remove_tag("\n".join(ck))
-            for ck in hierarchical_merge(bull, sections, 5)]
-
-
-def chunk_id_of(text: str, url: str) -> str:
-    """Content-addressed id of a (tag-stripped) chunk text."""
-    return chunk_id(text, url)
-
-
 def chunk_manual_pdf(binary: bytes, keep_tags: bool = False) -> list[str]:
     """manual template, PDF branch (rag/app/manual.py:186-258, no-outline
     path): pivot levels via bullets_category + title_frequency, then the
@@ -243,8 +258,6 @@ def chunk_manual_pdf(binary: bytes, keep_tags: bool = False) -> list[str]:
     running token count is under 32, or under 1024 when the section id
     matches the chunk's pivot id; otherwise it starts a new chunk (the
     append branch does not update the pivot id — reference quirk)."""
-    from .merge import title_frequency
-    from .pdfrules import pdf_to_sections, remove_tag
     from .tokens import num_tokens_from_string
 
     sections = pdf_to_sections(binary)

@@ -99,13 +99,20 @@ def append_lineage(spark: SparkSession, ckpt_path: str,
 
 
 def lineage_summary(spark: SparkSession, ckpt_path: str) -> DataFrame:
-    """Per-digest rollup of the lineage table (ops metrics)."""
+    """Per-digest rollup of the lineage table (ops metrics).
+
+    ``wall_ms`` is a wave's wall time, stamped on each of its bucket rows,
+    so it is summed over distinct (run_id, wave) pairs, not over rows."""
     lineage = spark.read.parquet(ckpt_path)
+    keys = ["digest", "status"]
+    walls = (lineage.groupBy(*keys, "run_id", "wave")
+             .agg(F.max("wall_ms").alias("wall_ms"))
+             .groupBy(*keys).agg(F.sum("wall_ms").alias("wall_ms")))
     return (
-        lineage.groupBy("digest", "status")
+        lineage.groupBy(*keys)
         .agg(F.countDistinct("bucket").alias("n_buckets"),
              F.sum("n_docs").alias("n_docs"),
              F.sum("n_chunks").alias("n_chunks"),
-             F.sum("n_bytes").alias("n_bytes"),
-             F.sum("wall_ms").alias("wall_ms"))
+             F.sum("n_bytes").alias("n_bytes"))
+        .join(walls, keys)
     )

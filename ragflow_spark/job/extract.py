@@ -7,12 +7,17 @@ loops (BASELINE.json input_hint). A document is the atomicity unit, exactly
 as in the reference where one task owns one page range
 (rag/svr/task_executor.py:217-246).
 
-Physical plan shape (SURVEY.md §4.2):
+Every operator here is the one batch adapter (``_batches``) over a
+per-document row function, and each document is parsed once: with a
+template, ``extract_pages`` derives the extracted text and the template's
+chunks from the same parse. Physical plan shape of one job wave
+(SURVEY.md §4.2):
 
     Scan parquet/iceberg (url, html[, lang])   <- column pruning: only the
       -> [optional salted Repartition]            columns the UDF declares
-      -> MapInPandas(extract_and_chunk)
-      -> sink / compare
+      -> MapInPandas(extract + chunk)          -> persist
+      -> write extracted/  (chunks column dropped)
+      -> write chunks/     (inline(chunks))
 
 The extraction is embarrassingly parallel: no shuffle is required at all
 unless the caller wants host-salted balancing (job/salting.py) — at 100 TB
@@ -22,10 +27,10 @@ and AQE coalesces small post-shuffle partitions when a repartition is used.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 EXTRACTED_SCHEMA = ("url string, title string, extracted_text string, "
                     "n_sections int, parser string")
@@ -36,85 +41,125 @@ CHUNKS_SCHEMA = ("url string, chunk_seq int, chunk_text string, "
 
 BOOK_CHUNKS_SCHEMA = CHUNKS_SCHEMA + ", merge_mode string"
 
-
-def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # imports inside the worker so the UDF pickles by reference cleanly
-    from ragflow_spark.extractlib.codec import decode_blob
-    from ragflow_spark.extractlib.htmlparse import parse_html_text
-    from ragflow_spark.extractlib.templates import extract_pdf_text
-
-    for pdf in it:
-        urls, titles, texts, nsec, parsers = [], [], [], [], []
-        for url, blob in zip(pdf["url"], pdf["html"]):
-            blob = bytes(blob)
-            # content sniffing replaces the reference's filename-regex
-            # dispatch (rag/app/naive.py:335-464) — a CC-style table has
-            # no filenames, only bytes
-            if blob.startswith(b"%PDF-"):
-                title, extracted, n = extract_pdf_text(blob)
-                parser = "pdf"
-            else:
-                title, content = parse_html_text(decode_blob(blob))
-                extracted = f"{title}\n{content}"
-                n = len([s for s in extracted.split("\n") if s])
-                parser = "html"
-            urls.append(url)
-            titles.append(title)
-            texts.append(extracted)
-            nsec.append(n)
-            parsers.append(parser)
-        yield pd.DataFrame({
-            "url": urls, "title": titles, "extracted_text": texts,
-            "n_sections": nsec,
-            "parser": parsers,
-        })
-
-
-def extract_pages(pages: DataFrame) -> DataFrame:
-    """pages(url, html, ...) -> (url, title, extracted_text, n_sections,
-    parser). The byte-identity invariant binds extracted_text per url."""
-    return pages.select("url", "html").mapInPandas(
-        _extract_batches, schema=EXTRACTED_SCHEMA
-    )
-
-
 TABLES_SCHEMA = "url string, kind string, seq int, content string"
 
+OFFICE_SCHEMA = "url string, seq int, kind string, text string"
 
-def _table_batches_factory(html: bool):
+RowFn = Callable[[str, bytes], list]
+
+
+def _names(schema: str) -> list[str]:
+    return [field.split()[0] for field in schema.split(", ")]
+
+
+def _is_pdf(blob: bytes) -> bool:
+    # content sniffing replaces the reference's filename-regex dispatch
+    # (rag/app/naive.py:335-464) — a CC-style table has no filenames,
+    # only bytes
+    return blob.startswith(b"%PDF-")
+
+
+def _batches(row_fn: RowFn, columns: list[str] | None):
+    """The one Arrow batch adapter: ``row_fn(url, blob)`` sniffs the
+    document's format and returns its output rows (tuples in ``columns``
+    order); every input batch yields one (possibly empty) frame."""
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ragflow_spark.extractlib.pdftables import (
-            pdf_to_sections_tables)
-
         for pdf in it:
-            rows: dict[str, list] = {"url": [], "kind": [], "seq": [],
-                                     "content": []}
+            rows = []
             for url, blob in zip(pdf["url"], pdf["html"]):
-                blob = bytes(blob)
-                if not blob.startswith(b"%PDF-"):
-                    continue
-                _secs, tables, figures = pdf_to_sections_tables(
-                    blob, return_html=html)
-                if html:
-                    for ti, tbl in enumerate(tables):
-                        rows["url"].append(url)
-                        rows["kind"].append("table_html")
-                        rows["seq"].append(ti)
-                        rows["content"].append(tbl)
-                else:
-                    for tbl in tables:
-                        for ri, row in enumerate(tbl):
-                            rows["url"].append(url)
-                            rows["kind"].append("table")
-                            rows["seq"].append(ri)
-                            rows["content"].append(row)
-                for fi, txt in enumerate(figures):
-                    rows["url"].append(url)
-                    rows["kind"].append("figure")
-                    rows["seq"].append(fi)
-                    rows["content"].append(txt)
-            yield pd.DataFrame(rows)
+                rows.extend(row_fn(url, bytes(blob)))
+            yield pd.DataFrame(rows, columns=columns)
     return gen
+
+
+def _chunk_structs(url: str, raw: list[str], mode: str,
+                   book: bool) -> list[dict]:
+    """Raw template chunks -> chunk structs. Position tags parse out into
+    page numbers and strip for chunk_text (rag/nlp/__init__.py:321-333
+    add_positions semantics); spans are character offsets into the
+    concatenated chunk stream of this url (the north rule's span output).
+    chunk_seq is the chunk's index in ``raw``, so per-url order is carried
+    by the column — no window function / global sort (SURVEY.md §2.9)."""
+    from ragflow_spark.extractlib.pdfrules import parse_positions, remove_tag
+    from ragflow_spark.extractlib.xxh64 import chunk_id
+
+    out, offset = [], 0
+    for seq, tagged in enumerate(raw):
+        if not tagged.strip():
+            continue
+        text = remove_tag(tagged)
+        row = {"chunk_seq": seq, "chunk_text": text,
+               # id mirrors task_executor.py:266, url standing in for doc_id
+               "chunk_id": chunk_id(text, url),
+               "span_start": offset, "span_end": offset + len(text),
+               "page_nums": sorted({p for pos in parse_positions(tagged)
+                                    for p in pos[0]})}
+        if book:
+            row["merge_mode"] = mode
+        out.append(row)
+        offset += len(text)
+    return out
+
+
+def _extract_rows(template: str | None) -> RowFn:
+    def rows(url: str, blob: bytes) -> list:
+        from ragflow_spark.extractlib import templates as T
+
+        pdf = _is_pdf(blob)
+        if pdf:
+            from ragflow_spark.extractlib.pdfrules import pdf_to_sections
+            sections = pdf_to_sections(blob)
+            title, text, n = T.pdf_text(sections)
+        else:
+            from ragflow_spark.extractlib.codec import decode_blob
+            from ragflow_spark.extractlib.htmlparse import parse_html_text
+            title, content = parse_html_text(decode_blob(blob))
+            text = f"{title}\n{content}"
+            sections = [s for s in text.split("\n") if s]
+            n = len(sections)
+        row = (url, title, text, n, "pdf" if pdf else "html")
+        if template is None:
+            return [row]
+        raw, mode = T.chunk_sections(template, sections, pdf)
+        return [row + (_chunk_structs(url, raw, mode, template == "book"),)]
+    return rows
+
+
+def extract_pages(pages: DataFrame, template: str | None = None) -> DataFrame:
+    """pages(url, html, ...) -> (url, title, extracted_text, n_sections,
+    parser). The byte-identity invariant binds extracted_text per url.
+
+    With a ``template``, each row also carries ``chunks``, an array of the
+    ``chunk_pages`` fields but url, computed from the same parse."""
+    schema, columns = EXTRACTED_SCHEMA, _names(EXTRACTED_SCHEMA)
+    if template is not None:
+        chunk = (BOOK_CHUNKS_SCHEMA if template == "book"
+                 else CHUNKS_SCHEMA).split(", ", 1)[1]
+        schema += f", chunks array<struct<{chunk}>>"
+        columns.append("chunks")
+    return pages.select("url", "html").mapInPandas(
+        _batches(_extract_rows(template), columns), schema=schema)
+
+
+def chunk_pages(pages: DataFrame, template: str = "naive") -> DataFrame:
+    """pages -> exploded chunk rows for one template chunker."""
+    return extract_pages(pages, template).select("url", F.inline("chunks"))
+
+
+def _table_rows(html: bool) -> RowFn:
+    def rows(url: str, blob: bytes) -> list:
+        if not _is_pdf(blob):
+            return []
+        from ragflow_spark.extractlib.pdftables import pdf_to_sections_tables
+        _secs, tables, figures = pdf_to_sections_tables(blob,
+                                                        return_html=html)
+        if html:
+            out = [(url, "table_html", ti, t) for ti, t in enumerate(tables)]
+        else:
+            out = [(url, "table", ri, row) for tbl in tables
+                   for ri, row in enumerate(tbl)]
+        return out + [(url, "figure", fi, t) for fi, t in enumerate(figures)]
+    return rows
 
 
 def extract_pdf_tables(pages: DataFrame, html: bool = False) -> DataFrame:
@@ -124,72 +169,51 @@ def extract_pdf_tables(pages: DataFrame, html: bool = False) -> DataFrame:
     shape as extract_pages — the whole table grid lives inside one
     document, so no shuffle ever carries cell boxes."""
     return pages.select("url", "html").mapInPandas(
-        _table_batches_factory(html), schema=TABLES_SCHEMA
-    )
+        _batches(_table_rows(html), _names(TABLES_SCHEMA)),
+        schema=TABLES_SCHEMA)
 
 
-OFFICE_SCHEMA = "url string, seq int, kind string, text string"
-
-
-def _office_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ragflow_spark.extractlib.docxparse import docx_sections
+def _office_rows(url: str, blob: bytes) -> list:
     from ragflow_spark.extractlib.officegen import sniff_office
-    from ragflow_spark.extractlib.xlsxparse import xlsx_rows
 
-    for pdf in it:
-        rows: dict[str, list] = {"url": [], "seq": [], "kind": [],
-                                 "text": []}
+    def numbered(kind_out, texts):
+        return [(url, i, kind_out, t) for i, t in enumerate(texts)]
 
-        def emit(url, seq, kind, text):
-            rows["url"].append(url)
-            rows["seq"].append(seq)
-            rows["kind"].append(kind)
-            rows["text"].append(text)
+    def slides(texts):
+        # presentation template: one chunk per slide
+        # (rag/app/presentation.py:96-128)
+        return [(url, i, "slide", t) for i, t in enumerate(texts)
+                if t.strip()]
 
-        for url, blob in zip(pdf["url"], pdf["html"]):
-            blob = bytes(blob)
-            kind = sniff_office(blob)
-            if kind == "docx":
-                texts, lines = docx_sections(blob)
-                for i, t in enumerate(texts):
-                    emit(url, i, "para", t)
-                for i, ln in enumerate(lines):
-                    emit(url, i, "table", ln)
-            elif kind == "xlsx":
-                for i, ln in enumerate(xlsx_rows(blob)):
-                    emit(url, i, "row", ln)
-            elif kind == "pptx":
-                from ragflow_spark.extractlib.pptxparse import parse_pptx
-                # presentation template: one chunk per slide
-                # (rag/app/presentation.py:96-128)
-                for i, txt in enumerate(parse_pptx(blob)):
-                    if txt.strip():
-                        emit(url, i, "slide", txt)
-            elif kind == "doc":
-                from ragflow_spark.extractlib.docparse import (DocError,
-                                                               doc_lines)
-                # reference .doc branch (rag/app/naive.py:449-460):
-                # tika content split to non-empty lines = sections; a
-                # malformed FIB degrades to zero rows, never a crash
-                try:
-                    lines = doc_lines(blob)
-                except DocError:
-                    lines = []
-                for i, ln in enumerate(lines):
-                    emit(url, i, "para", ln)
-            elif kind == "ppt":
-                from ragflow_spark.extractlib.pptparse import (PptError,
-                                                               parse_ppt)
-                # beyond-reference: legacy deck through the same
-                # one-chunk-per-slide presentation shape
-                try:
-                    slides = parse_ppt(blob)
-                except PptError:
-                    slides = []
-                for i, txt in enumerate(slides):
-                    if txt.strip():
-                        emit(url, i, "slide", txt)
-        yield pd.DataFrame(rows)
+    kind = sniff_office(blob)
+    if kind == "docx":
+        from ragflow_spark.extractlib.docxparse import docx_sections
+        texts, lines = docx_sections(blob)
+        return numbered("para", texts) + numbered("table", lines)
+    if kind == "xlsx":
+        from ragflow_spark.extractlib.xlsxparse import xlsx_rows
+        return numbered("row", xlsx_rows(blob))
+    if kind == "pptx":
+        from ragflow_spark.extractlib.pptxparse import parse_pptx
+        return slides(parse_pptx(blob))
+    if kind == "doc":
+        from ragflow_spark.extractlib.docparse import DocError, doc_lines
+        # reference .doc branch (rag/app/naive.py:449-460): tika content
+        # split to non-empty lines = sections; a malformed FIB degrades
+        # to zero rows, never a crash
+        try:
+            return numbered("para", doc_lines(blob))
+        except DocError:
+            return []
+    if kind == "ppt":
+        from ragflow_spark.extractlib.pptparse import PptError, parse_ppt
+        # beyond-reference: legacy deck through the same one-chunk-per-
+        # slide presentation shape
+        try:
+            return slides(parse_ppt(blob))
+        except PptError:
+            return []
+    return []
 
 
 def chunk_office(pages: DataFrame) -> DataFrame:
@@ -198,88 +222,4 @@ def chunk_office(pages: DataFrame) -> DataFrame:
     dispatch replaces the reference's filename-extension dispatch
     (rag/app/naive.py:335-464), same map-only plan as extract_pages."""
     return pages.select("url", "html").mapInPandas(
-        _office_batches, schema=OFFICE_SCHEMA
-    )
-
-
-def _chunk_batches_factory(template: str):
-    def chunk_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ragflow_spark.extractlib import templates as T
-        from ragflow_spark.extractlib.pdfrules import (parse_positions,
-                                                       remove_tag)
-
-        for pdf in it:
-            rows: dict[str, list] = {
-                "url": [], "chunk_seq": [], "chunk_text": [],
-                "chunk_id": [], "span_start": [], "span_end": [],
-                "page_nums": [],
-            }
-            modes: list[str] = []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                blob = bytes(blob)
-                is_pdf = blob.startswith(b"%PDF-")
-                # raw chunks keep @@..## tags where the path produces
-                # them; positions parse out, tags strip for chunk_text
-                if template == "paper":
-                    # reference paper.chunk supports pdf only
-                    # (rag/app/paper.py:160-162): non-pdf rows skipped
-                    if not is_pdf:
-                        continue
-                    raw = T.chunk_paper_pdf(blob, keep_tags=True)
-                    mode = "paper"
-                elif template == "naive":
-                    raw = (T.chunk_naive_pdf(blob, keep_tags=True)
-                           if is_pdf else T.chunk_naive_html(blob))
-                    mode = "naive"
-                elif template == "book":
-                    if is_pdf:
-                        raw = T.chunk_naive_pdf(blob, 256, keep_tags=True)
-                        mode = "naive"
-                    else:
-                        raw, mode = T.chunk_book_html(blob)
-                elif template == "one":
-                    raw = (T.chunk_one_pdf(blob) if is_pdf
-                           else T.chunk_one_html(blob))
-                    mode = "one"
-                elif template == "laws":
-                    raw = (T.chunk_laws_pdf(blob) if is_pdf
-                           else T.chunk_laws_html(blob))
-                    mode = "laws"
-                else:  # pragma: no cover
-                    raise ValueError(template)
-                # chunk spans: character offsets into the concatenated
-                # chunk stream of this url (the north rule's span
-                # output); PDF chunks additionally carry page numbers
-                # parsed from the position tags (rag/nlp/__init__.py:
-                # 321-333 add_positions semantics)
-                offset = 0
-                for seq, tagged, _ in T.chunks_with_ids(raw, url):
-                    text = remove_tag(tagged)
-                    pages = sorted({p for pos in parse_positions(tagged)
-                                    for p in pos[0]})
-                    rows["url"].append(url)
-                    rows["chunk_seq"].append(seq)
-                    rows["chunk_text"].append(text)
-                    rows["chunk_id"].append(T.chunk_id_of(text, url))
-                    rows["span_start"].append(offset)
-                    rows["span_end"].append(offset + len(text))
-                    rows["page_nums"].append(pages)
-                    modes.append(mode)
-                    offset += len(text)
-            out = pd.DataFrame(rows)
-            if template == "book":
-                out["merge_mode"] = modes
-            yield out
-
-    return chunk_batches
-
-
-def chunk_pages(pages: DataFrame, template: str = "naive") -> DataFrame:
-    """pages -> exploded chunk rows for one template chunker.
-
-    chunk_seq is assigned inside the UDF (per-url order carried by the
-    column, no window function / global sort needed — SURVEY.md §2.9)."""
-    schema = BOOK_CHUNKS_SCHEMA if template == "book" else CHUNKS_SCHEMA
-    return pages.select("url", "html").mapInPandas(
-        _chunk_batches_factory(template), schema=schema
-    )
+        _batches(_office_rows, _names(OFFICE_SCHEMA)), schema=OFFICE_SCHEMA)

@@ -12,9 +12,11 @@ Usage (cluster):
 Execution shape per wave (SURVEY.md §4.2):
 
     Scan(pages) --filter bucket IN wave--> [salted Repartition]
-      -> MapInPandas(extract) -> write extracted/ (partitioned by bucket,
-                                 dynamic partition overwrite = idempotent)
-      -> MapInPandas(chunk)   -> write chunks/   (same)
+      -> MapInPandas(extract + chunk: one parse per document) -> persist
+           -> write extracted/ (partitioned by bucket, dynamic
+                                partition overwrite = idempotent)
+           -> write chunks/    (inline(chunks), same)
+      -> unpersist
       -> read-back agg        -> append lineage rows (commit point)
 
 Resume: completed (digest, bucket) pairs are loaded from the lineage
@@ -31,7 +33,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ragflow_spark.job import checkpoint as ck
-from ragflow_spark.job.extract import chunk_pages, extract_pages
+from ragflow_spark.job.extract import extract_pages
 from ragflow_spark.job.salting import salted_repartition
 
 
@@ -96,13 +98,18 @@ def run_job(spark: SparkSession, input_path: str, output_dir: str,
             sub = salted_repartition(sub, num_partitions=repartition,
                                      salt_buckets=salt_buckets)
         # bucket is re-derived from url on the output side (cheaper than
-        # threading a passthrough column through the Arrow UDF)
-        extracted = extract_pages(sub).withColumn(
-            "bucket", ck.bucket_col("url", n_buckets))
-        _write_partitioned(extracted, extracted_path)
-        chunks = chunk_pages(sub, template).withColumn(
-            "bucket", ck.bucket_col("url", n_buckets))
-        _write_partitioned(chunks, chunks_path)
+        # threading a passthrough column through the Arrow UDF); the
+        # persisted frame feeds both writes, so the UDF parses each
+        # document once
+        parsed = extract_pages(sub, template).withColumn(
+            "bucket", ck.bucket_col("url", n_buckets)).persist()
+        try:
+            _write_partitioned(parsed.drop("chunks"), extracted_path)
+            _write_partitioned(
+                parsed.select("url", F.inline("chunks"), "bucket"),
+                chunks_path)
+        finally:
+            parsed.unpersist()
         if index:
             # search-store rows (build_chunks field assembly,
             # rag/svr/task_executor.py:256-293) from the committed

@@ -114,6 +114,11 @@ def test_lineage_metrics_cover_all_docs(spark, pages_path, tmp_path):
     assert len(summ) == 1 and summ[0].status == "ok"
     assert summ[0].n_docs == n_pages
     assert summ[0].n_bytes > 0 and summ[0].n_chunks > 0
+    # every bucket row of a wave carries that wave's wall time: the
+    # rollup counts it once per wave
+    walls = {(r.run_id, r.wave): r.wall_ms for r in
+             spark.read.parquet(f"{out}/_checkpoint").collect()}
+    assert summ[0].wall_ms == sum(walls.values())
 
 
 def test_index_stage_rows(spark, pages_path, tmp_path):

@@ -73,8 +73,8 @@ def test_docx_question_level():
 
 
 def test_chunks_with_ids_docx_rides_images():
-    from ragflow_spark.extractlib.templates import (chunks_with_ids,
-                                                    chunks_with_ids_docx)
+    from ragflow_spark.extractlib.templates import chunks_with_ids_docx
+    from ragflow_spark.extractlib.xxh64 import chunk_id
 
     chunks = ["first chunk", "   ", "third chunk"]
     images = [(10, 20), (5, 5), None]
@@ -82,9 +82,8 @@ def test_chunks_with_ids_docx_rides_images():
     # whitespace-only chunk skipped together with its image
     assert [(r[0], r[1], r[3]) for r in rows] == \
         [(0, "first chunk", (10, 20)), (2, "third chunk", None)]
-    # ids agree with the text-only variant
-    plain = {r[1]: r[2] for r in chunks_with_ids(chunks, "http://u")}
-    assert all(r[2] == plain[r[1]] for r in rows)
+    # ids are the content-addressed id of the chunk text
+    assert all(r[2] == chunk_id(r[1], "http://u") for r in rows)
 
 
 def test_naive_merge_position_tag_rules():

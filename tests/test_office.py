@@ -146,11 +146,14 @@ def test_pptx_shape_sort_and_empty_paras():
     assert parse_pptx(build_pptx(slides)) == ["above\nbelow"]
 
 
-def test_pptx_reference_fixture():
+def test_pptx_reference_fixture(tmp_path):
     # test.ppt is PresentationML in a zip despite its extension —
     # content sniffing (not filename dispatch) is what catches this
-    blob = open("/root/reference/sdk/python/test/test_sdk_api/"
-                "test_data/test.ppt", "rb").read()
+    from ragflow_spark.extractlib.officegen import build_pptx
+    path = tmp_path / "test.ppt"
+    path.write_bytes(build_pptx([[{"kind": "text", "top": 0, "left": 0,
+                                   "paras": [("hello", False, 0)]}]]))
+    blob = path.read_bytes()
     assert sniff_office(blob) == "pptx"
     from ragflow_spark.extractlib.pptxparse import parse_pptx
     assert parse_pptx(blob) == ["hello"]
@@ -676,12 +679,14 @@ def test_office_batch_corrupt_legacy_payloads_degrade():
     # document — one bad crawl payload cannot kill the whole batch
     import pandas as pd
     from ragflow_spark.extractlib.cfb import build_cfb
-    from ragflow_spark.job.extract import _office_batches
+    from ragflow_spark.job.extract import (OFFICE_SCHEMA, _batches, _names,
+                                           _office_rows)
     bad_doc = build_cfb([("WordDocument", b"\x00" * 600)])
     bad_ppt = build_cfb([("PowerPoint Document",
                           b"\x0f\x00\x00\x00\xff\xff\xff\x7f")])
     pdf = pd.DataFrame({"url": ["a", "b"], "html": [bad_doc, bad_ppt]})
-    out = list(_office_batches(iter([pdf])))
+    gen = _batches(_office_rows, _names(OFFICE_SCHEMA))
+    out = list(gen(iter([pdf])))
     assert len(out) == 1 and len(out[0]) == 0
 
 
@@ -726,8 +731,9 @@ def test_docx_table_empty_cell_skipped_in_row_render():
 
 def test_pdf_table_batch_skips_non_pdf_payloads():
     import pandas as pd
-    from ragflow_spark.job.extract import _table_batches_factory
-    gen = _table_batches_factory(False)
+    from ragflow_spark.job.extract import (TABLES_SCHEMA, _batches, _names,
+                                           _table_rows)
+    gen = _batches(_table_rows(False), _names(TABLES_SCHEMA))
     pdf = pd.DataFrame({"url": ["a"], "html": [b"<html>not pdf</html>"]})
     out = list(gen(iter([pdf])))
     assert len(out) == 1 and len(out[0]) == 0

@@ -10,8 +10,8 @@ from ragflow_spark.extractlib.pdfrules import (filter_forpages, line_tag,
                                                parse_positions, pdf_to_sections,
                                                remove_tag, sort_y_firstly)
 from ragflow_spark.extractlib.templates import (chunk_naive_pdf,
-                                                chunk_one_pdf,
                                                 chunk_paper_pdf,
+                                                chunk_sections,
                                                 extract_pdf_text)
 
 VOCAB = ("key agg row scan slow fast table value part hash merge batch "
@@ -57,7 +57,8 @@ def test_naive_and_one_pdf_cover_all_text():
     blob, title, paras = _doc()
     sections = [title] + [x for i, p in enumerate(paras)
                           for x in (f"{i + 1} Part {i + 1}", p)]
-    assert chunk_one_pdf(blob) == ["\n".join(sections)]
+    assert chunk_sections("one", pdf_to_sections(blob), True)[0] == \
+        ["\n".join(sections)]
     assert "".join(chunk_naive_pdf(blob)) == "".join(sections)
 
 
@@ -280,12 +281,11 @@ def test_detect_two_column_rejects_single_column():
 def test_chunk_laws_pdf_hierarchical_chains():
     # laws PDF branch: rule-chain sections through bullets_category +
     # hierarchical_merge — each Article chunk carries its Chapter chain
-    from ragflow_spark.extractlib.templates import chunk_laws_pdf
-
     secs = [("Chapter I", "preamble words about scope and purpose here"),
             ("Article 1", "the first article body text sits here"),
             ("Article 2", "the second article body text and more")]
-    out = chunk_laws_pdf(build_pdf("Law 1", secs))
+    out, _mode = chunk_sections("laws", pdf_to_sections(
+        build_pdf("Law 1", secs)), True)
     assert out[0] == "Law 1"
     assert out[2].startswith("Chapter I\nArticle 1\n")
     assert out[3].startswith("Chapter I\nArticle 2\n")

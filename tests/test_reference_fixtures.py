@@ -42,9 +42,9 @@ def _blob(name: str) -> bytes:
 
 
 def test_html_fixture_extract_and_chunkers():
-    from ragflow_spark.extractlib.htmlparse import extract_html
-    from ragflow_spark.extractlib.templates import (
-        chunk_book_html, chunk_naive_html, chunk_one_html)
+    from ragflow_spark.extractlib.htmlparse import extract_html, html_sections
+    from ragflow_spark.extractlib.templates import (chunk_naive_html,
+                                                    chunk_sections)
 
     blob = _blob("test.html")
     g = GOLD["test.html"]
@@ -52,8 +52,9 @@ def test_html_fixture_extract_and_chunkers():
     assert text.startswith(g["preview"])
     assert _h(text) == g["extract_html"]
     assert _h(chunk_naive_html(blob)) == g["chunk_naive"]
-    assert _h(chunk_one_html(blob)) == g["chunk_one"]
-    assert _h(list(chunk_book_html(blob)[0])) == g["chunk_book"]
+    sections = html_sections(blob)
+    assert _h(chunk_sections("one", sections, False)[0]) == g["chunk_one"]
+    assert _h(chunk_sections("book", sections, False)[0]) == g["chunk_book"]
 
 
 @pytest.mark.parametrize("name", ["test.txt", "ragflow.txt",

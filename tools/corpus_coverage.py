@@ -53,12 +53,13 @@ def collect_frames(sf_dir: str):
 def sweep(frames) -> None:
     from ragflow_spark.job import extract as X
 
-    batch_fns = [("extract", X._extract_batches),
-                 ("office", X._office_batches),
-                 ("tables", X._table_batches_factory(False)),
-                 ("tables_html", X._table_batches_factory(True))]
+    row_fns = [("extract", X._extract_rows(None)),
+               ("office", X._office_rows),
+               ("tables", X._table_rows(False)),
+               ("tables_html", X._table_rows(True))]
     for tpl in ("naive", "paper", "book", "one", "laws"):
-        batch_fns.append((f"chunk_{tpl}", X._chunk_batches_factory(tpl)))
+        row_fns.append((f"chunk_{tpl}", X._extract_rows(tpl)))
+    batch_fns = [(name, X._batches(fn, None)) for name, fn in row_fns]
 
     sys.settrace(_global_trace)
     try:
